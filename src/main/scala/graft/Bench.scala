@@ -78,35 +78,35 @@ object Bench {
       .take(cap)
       .map(_._1)
 
+  /** The published line. "value" is steady-state probe cost (layout
+    * ingest split out since r10); "total_with_ingest" keeps cross-round
+    * totals comparable with pre-split rounds. A failed query is listed
+    * under "failed" and nowhere else: not in "queries", "reps",
+    * "repass", "ingest" or either total ("bench_schema":3). */
+  private[graft] def benchLine(sf: String, results: Seq[(String, Double, Int)],
+      ingest: Seq[(String, Double)], repass: Seq[(String, Double)],
+      smear: Option[(Double, Option[Double])], failed: Seq[String]): String = {
+    val bad = failed.toSet
+    def obj(kv: Seq[(String, String)]): String = kv
+      .collect { case (k, v) if !bad(k) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    def secs(kv: Seq[(String, Double)]) = obj(kv.map { case (k, v) => k -> f"$v%.3f" })
+    val ok = results.filterNot(r => bad(r._1))
+    val total = ok.map(_._2).sum
+    val totalWithIngest = total + ingest.filterNot(p => bad(p._1)).map(_._2).sum
+    val qs = secs(ok.map { case (k, v, _) => k -> v })
+    val reps = obj(ok.collect { case (k, _, n) if n > 1 => k -> n.toString })
+    val smearJson = smear.map { case (p, after) =>
+      f""","sweep_smear":$p%.3f""" +
+        after.map(a => f""","sweep_smear_after":$a%.3f""").getOrElse("")
+    }.getOrElse("")
+    val failedJson = failed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","bench_schema":3,"total_with_ingest":$totalWithIngest%.3f,"queries":$qs,"reps":$reps,"repass":${secs(repass)},"ingest":${secs(ingest)}$smearJson,"failed":$failedJson,"sf":$sf}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // r18: AQE advisory-size partition coalescing ON
-    // (parallelismFirst=false), with the advisory size PARAMETERIZED and
-    // defaulted to the bench's own data scale (guide §2.2: derive the
-    // partition count from the shuffle's bytes, not a core-count
-    // constant). Measured at sf0.1: advisory=64m collapses the CPU-heavy
-    // verify stages to 1 task and regresses them 1.3-2.2x (d05 5.0→10.9 s),
-    // while advisory=4m coalesces only the genuinely tiny exchanges
-    // (final sorts, label tables) and wins d03 5.5→3.8, d05 4.2→3.2,
-    // d20 5.1→4.3 with the wide stages untouched. 4m is the LOCAL
-    // default matched to sf0.1's MB-scale shuffles; a production
-    // deployment sets SPARK_GRAFT_ADVISORY_PARTITION=64m..256m so
-    // partitions land in the guide's 100 MB-1 GB band (see
-    // OPTIMIZATION_r18.md for the full A/B table).
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "4m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     // warm-up: JIT + parquet footer caches + session init, so timings
     // reflect steady-state throughput rather than first-query setup
     graft.core.Tables.all.foreach { t =>
@@ -157,11 +157,15 @@ object Bench {
     // only when the first two disagree by >30% (contention suspected).
     val repMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "auto")
     val slowThresholdSec = 0.8
+    // A query that throws in any run is published under "failed" and
+    // left out of every figure: how fast it broke is not its cost.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -246,7 +250,7 @@ object Bench {
         def rerun(): Double =
           if (layoutQueries(name)) once(name, fn) else onceCold(name, fn)
         val t1 = once(name, fn)
-        val times = repMode match {
+        val times = if (failed(name)) Seq(t1) else repMode match {
           case "1" => Seq(t1)
           case "2" => Seq(t1, rerun())
           case "3" => Seq(t1, rerun(), rerun())
@@ -273,8 +277,9 @@ object Bench {
     val baseline =
       if (committedBaseline._1.contains(sfNum)) committedBaseline._2
       else Map.empty[String, Double]
-    val candidates = repassCandidates(baseline,
-      results.map { case (k, v, _) => k -> v }.toMap)
+    def ok(rs: Seq[(String, Double, Int)]): Map[String, Double] =
+      rs.collect { case (k, v, _) if !failed(k) => k -> v }.toMap
+    val candidates = repassCandidates(baseline, ok(results))
     // A layout candidate rebuilds its memoized store untimed, then times
     // the warm probe (the figure the sweep reports). A non-layout
     // candidate gets a cold run AND a warm follow-up: the sweep's own t1
@@ -284,13 +289,14 @@ object Bench {
     // figures are deliberately out of scope (the ingest loop already
     // min-of-reps across 2-3 cold runs back to back — a multi-minute
     // window there shows as a layout anomaly, not a silent probe bill).
-    val repassed: Map[String, Double] = candidates.map { name =>
+    def repass(names: Seq[String]): Map[String, Double] = names.map { name =>
       val fn = SparkEntry.queries(name)
       val t =
         if (layoutQueries(name)) { onceCold(name, fn); once(name, fn) }
         else math.min(onceCold(name, fn), once(name, fn))
       name -> t
     }.toMap
+    val repassed = repass(candidates)
     val afterRepass = results.map { case (k, v, n) =>
       (k, math.min(v, repassed.getOrElse(k, v)), n)
     }
@@ -303,50 +309,25 @@ object Bench {
     // correction achieved). Subset runs and new-SF runs have no
     // comparable baseline and skip this (sweepSmear returns None or the
     // baseline map is empty).
-    val preSmear = sweepSmear(baseline,
-      afterRepass.map { case (k, v, _) => k -> v }.toMap)
-    val smearRepassed: Map[String, Double] =
-      if (preSmear.exists(_ > 1.15)) {
-        smearCandidates(baseline,
-          afterRepass.map { case (k, v, _) => k -> v }.toMap).map { name =>
-          val fn = SparkEntry.queries(name)
-          val t =
-            if (layoutQueries(name)) { onceCold(name, fn); once(name, fn) }
-            else math.min(onceCold(name, fn), once(name, fn))
-          name -> t
-        }.toMap
-      } else Map.empty
+    val preSmear = sweepSmear(baseline, ok(afterRepass))
+    val smearRepassed =
+      if (preSmear.exists(_ > 1.15))
+        repass(smearCandidates(baseline, ok(afterRepass)))
+      else Map.empty[String, Double]
     val finalResults = afterRepass.map { case (k, v, n) =>
       (k, math.min(v, smearRepassed.getOrElse(k, v)), n)
     }
-    val postSmear = sweepSmear(baseline,
-      finalResults.map { case (k, v, _) => k -> v }.toMap)
-    val qs = finalResults.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val reps = finalResults.filter(_._3 > 1)
-      .map { case (k, _, n) => "\"" + k + s"\":$n" }.mkString("{", ",", "}")
+    val postSmear = sweepSmear(baseline, ok(finalResults))
     // min-merge per key (ADVICE r18 item 3): a query re-run by BOTH the
     // >3x repass and the smear repass publishes its best re-measurement,
     // matching what the min-merged result actually used
-    val repassJson = (repassed.keySet ++ smearRepassed.keySet).toSeq.sorted
+    val bestRepass = (repassed.keySet ++ smearRepassed.keySet).toSeq.sorted
       .map { k =>
-        val v = math.min(repassed.getOrElse(k, Double.MaxValue),
+        k -> math.min(repassed.getOrElse(k, Double.MaxValue),
           smearRepassed.getOrElse(k, Double.MaxValue))
-        "\"" + k + f"\":$v%.3f"
-      }.mkString("{", ",", "}")
-    val smearJson = preSmear.map { p =>
-      f""","sweep_smear":$p%.3f""" +
-        postSmear.map(a => f""","sweep_smear_after":$a%.3f""").getOrElse("")
-    }.getOrElse("")
-    val total = finalResults.map(_._2).sum
-    val ing = ingest.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    // "value" is steady-state probe cost (layout ingest split out since r10);
-    // "total_with_ingest" keeps cross-round totals comparable with pre-split
-    // rounds, and "bench_schema":2 marks the semantics change explicitly.
-    val totalWithIngest = total + ingest.values.sum
-    val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","bench_schema":2,"total_with_ingest":$totalWithIngest%.3f,"queries":$qs,"reps":$reps,"repass":$repassJson,"ingest":$ing$smearJson,"sf":$sfNum}"""
+      }
+    val line = benchLine(sfNum, finalResults, ingest.toSeq, bestRepass,
+      preSmear.map(p => (p, postSmear)), failed.toSeq)
     println(line)
     // the driver keeps only a tail of stdout, which truncates the
     // per-query map at 145 queries — persist the full line next to the

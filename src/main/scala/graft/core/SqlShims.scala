@@ -32,6 +32,16 @@ object GraftSqlShims {
       exp.extraStrategies = st +: exp.extraStrategies
   }
 
+  /** The optimizer rules a session runs beyond Spark's own: those
+    * injected by extensions plus `experimental.extraOptimizations`. */
+  def extraOptimizerRules(spark: SparkSession): Seq[
+      org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.sessionState.optimizer.extendedOperatorOptimizationRules ++
+      s.experimental.extraOptimizations
+  }
+
   /** Register function builders on an EXISTING session (the extensions
     * path only applies at session construction). */
   def registerFunctions(

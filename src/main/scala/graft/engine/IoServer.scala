@@ -252,15 +252,8 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
       if (isFinal) {
         import scala.jdk.CollectionConverters._
         val schema = inferSchema(cols, pendingRows.head)
-        val built = spark.createDataFrame(
-          pendingRows.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava, schema)
-        val zip = isCompressed(q) &&
-          schema.fieldNames.contains("measure") &&
-          schema("measure").dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
-        val df = (if (zip) deflateMeasure(built) else built)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        server.putFrag(db, nm, df, pendingRows.size.toLong, compressed = zip)
+        store(db, nm, spark.createDataFrame(
+          pendingRows.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava, schema), q)
         openFrag = None
         pendingRows.clear()
       }
@@ -335,24 +328,7 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
           Seq((1L, "name"), (2L, "ret"), (3L, "dl"), (4L, "type"))
             .toDF("id_dim", "field_name")
         } else if (f.startsWith("@")) {
-          var r = spark.read.format("graft.sources.NetCDFSource")
-            .option("path", f.drop(1))
-            .option("var", q.get("measure").getOrElse("measure"))
-          Seq("explicit", "dim_start", "dim_end", "key_start", "partitions",
-        "element_type", "dim_index", "cf_unpack")
-            .foreach(k => q.get(k).foreach(v => r = r.option(k, v)))
-          val loaded = r.load()
-          // read-stream reduction folded into the load (the ESDM
-          // sub_operation/sub_args path, oph_io_server_esdm.c:1890-1899 +
-          // oph_query_engine_language.h:90-91): reduce the implicit array
-          // BEFORE materialization so only the reduced data flows on
-          q.get("sub_operation") match {
-            case Some(op) =>
-              val bs = q.get("sub_args").map(_.toInt).getOrElse(Int.MaxValue)
-              loaded.withColumn("measure",
-                graft.functions.ArrayPrimitives.oph_reduce(col("measure"), op, bs))
-            case None => loaded
-          }
+          loadNetCdf(f.drop(1), q)
         } else { val (db, nm) = splitName(f); server.getFrag(db, nm) }
       }
 
@@ -575,14 +551,7 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
       if (server.compatStrict)
         require(q.multi("field").size == 2,
           "compat mode: CTAS output must have exactly 2 columns (id_dim, measure)")
-      val built = buildSelect(q, binds)
-      val zip = isCompressed(q) && built.schema.fieldNames.contains("measure") &&
-        built.schema("measure").dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]
-      val df = (if (zip) deflateMeasure(built) else built)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = df.count() // materialize (the reference stores eagerly)
-      server.putFrag(db, nm, df, n, compressed = zip)
+      store(db, nm, buildSelect(q, binds), q)
     }
 
     // -- file_import / esdm_import (oph_io_server_query.c:341-375,
@@ -593,34 +562,50 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
       val (db, nm) = splitName(q("frag_name"))
       val path = q.get("src_path").orElse(q.get("path")).getOrElse(
         throw new IllegalArgumentException("src_path required"))
-      var r = spark.read.format("graft.sources.NetCDFSource")
-        .option("path", path.stripPrefix("@"))
+      store(db, nm, loadNetCdf(path.stripPrefix("@"), q), q)
+    }
+
+    // -- the NetCDF reader behind '@path' FROM entries and file_import,
+    //    with the query's src_path-style options (measure, explicit,
+    //    dim_start/dim_end — oph_io_server_query_blocks.c:1085-1410).
+    //    ESDM's read-stream reduction (sub_operation/sub_args,
+    //    oph_io_server_esdm.c:1890-1899 + oph_query_engine_language.h:
+    //    90-91) folds into the load: the implicit array is reduced BEFORE
+    //    materialization so only the reduced data flows on --
+    private def loadNetCdf(path: String, q: ParsedQuery): DataFrame = {
+      val opts = Seq("explicit", "dim_start", "dim_end", "key_start",
+        "partitions", "element_type", "dim_index", "cf_unpack")
+        .flatMap(k => q.get(k).map(k -> _)).toMap
+      val loaded = spark.read.format("graft.sources.NetCDFSource")
+        .option("path", path)
         .option("var", q.get("measure").getOrElse("measure"))
-      Seq("explicit", "dim_start", "dim_end", "key_start", "partitions",
-        "element_type", "dim_index", "cf_unpack")
-        .foreach(k => q.get(k).foreach(v => r = r.option(k, v)))
-      val loaded = r.load()
-      val reduced = q.get("sub_operation") match {
+        .options(opts)
+        .load()
+      q.get("sub_operation") match {
         case Some(op) =>
           val bs = q.get("sub_args").map(_.toInt).getOrElse(Int.MaxValue)
           loaded.withColumn("measure",
             graft.functions.ArrayPrimitives.oph_reduce(col("measure"), op, bs))
         case None => loaded
       }
-      val zip = isCompressed(q)
-      val stored = if (zip) deflateMeasure(reduced) else reduced
-      val df = stored.persist(StorageLevel.MEMORY_AND_DISK)
-      server.putFrag(db, nm, df, df.count(), compressed = zip)
     }
 
-    // -- compressed=yes (oph_query_engine_language.h:82): the stored
-    //    fragment keeps zlib-deflated packed-double cells; getFrag
-    //    inflates on read --
-    private def isCompressed(q: ParsedQuery): Boolean =
-      q.get("compressed").exists(_.equalsIgnoreCase("yes"))
-    private def deflateMeasure(df: DataFrame): DataFrame =
-      df.withColumn("measure", graft.sources.BinaryCodec.oph_compress(
-        graft.sources.BinaryCodec.oph_to_bin(col("measure"))))
+    // -- every fragment write (insert, CTAS, file_import, random_import):
+    //    compressed=yes (oph_query_engine_language.h:82) stores an array
+    //    measure as zlib-deflated packed-double cells (getFrag inflates on
+    //    read); the fragment is persisted and materialized eagerly, as
+    //    the reference stores, and its row count is the size hint --
+    private def store(db: String, nm: String, built: DataFrame,
+                      q: ParsedQuery): Unit = {
+      val zip = q.get("compressed").exists(_.equalsIgnoreCase("yes")) &&
+        built.schema.find(_.name == "measure")
+          .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+      val df = (if (zip) built.withColumn("measure",
+          graft.sources.BinaryCodec.oph_compress(
+            graft.sources.BinaryCodec.oph_to_bin(col("measure"))))
+        else built).persist(StorageLevel.MEMORY_AND_DISK)
+      server.putFrag(db, nm, df, df.count(), compressed = zip)
+    }
 
     // -- random_import (oph_io_server_query_engine.c:686-810): synthetic
     //    fragment; algorithm=default (uniform[0,1000)) or temperatures
@@ -655,12 +640,7 @@ final class IoServer(val spark: SparkSession, maxResultRows: Int = 1000000,
             })
         case o => throw new IllegalArgumentException(s"unknown algorithm: $o")
       }
-      val zip = isCompressed(q)
-      val built = base.withColumn("measure", measure)
-      val df = (if (zip) deflateMeasure(built) else built)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      server.putFrag(db, nm, df, nrows, compressed = zip)
+      store(db, nm, base.withColumn("measure", measure), q)
     }
 
     // -- stored procedures (oph_io_server_query_procedures.c) --

@@ -2872,8 +2872,8 @@ object RelationalQueries {
     * Scale shape: partitioned writes are executor-parallel per
     * partition directory; the restatement touches one partition's
     * files regardless of table size; the report is one map-combined
-    * per-month aggregate. The session conf is restored in a finally —
-    * sweep neighbors must not inherit dynamic mode. */
+    * per-month aggregate. Dynamic mode is a per-write option, never
+    * the session conf: sweep neighbors must not inherit it. */
   def q79_dynamic_overwrite(s: SparkSession, dir: String): DataFrame = {
     val tag = graft.core.SessionMemo.pathTag(s, dir)
     val path = new java.io.File(System.getProperty("java.io.tmpdir"),
@@ -2891,13 +2891,8 @@ object RelationalQueries {
     val restated = base.filter(col("month") === "1997-06")
       .withColumn("o_totalprice", col("o_totalprice") + 1024.0)
       .withColumn("o_orderstatus", lit("R"))
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try restated.write.partitionBy("month").mode("overwrite").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    restated.write.partitionBy("month").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
     s.read.parquet(path)
       .groupBy("month")
       .agg(count(lit(1)).as("n"),

@@ -6,11 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions hook: registers the engine's native expressions
   * as SQL functions, so plain `spark.sql` pipelines (and any BI layer on
-  * top) can call them without the Scala DSL:
-  *
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)   // or
-  *     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  * top) can call them without the Scala DSL. [[graft.core.GraftSession]]
+  * loads it into every engine session; another Spark application loads
+  * it with `.withExtensions(new GraftExtensions)` on its builder or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`:
   *
   *   spark.sql("SELECT graft_dot(a, b), graft_simhash60(hs) FROM t")
   */

@@ -22,7 +22,9 @@ import graft.sources.BinaryCodec
   *   EQ <dialect query> execute (create_frag_select / select / ...)
   *   RS [n]            fetch up to n rows of the last result set
   *   BYE               close
-  * RS returns {"ok":true,"nrows":...,"fields":[...],"rows":[[...]]}.
+  * RS returns {"ok":true,"fields":[...],"rows":[[...]],"nrows":...}:
+  * the page is streamed once and counted as it is written, so nrows
+  * comes last (JSON member order carries no meaning).
   *
   * `wire="binary"` — the reference client's frame protocol
   *   (oph_io_server_thread.c:150-700, oph_io_client_interface.h:34-66),
@@ -267,22 +269,23 @@ final class IoService(spark: SparkSession, port: Int = 0,
             val n = if (arg.isEmpty) 1000 else arg.toInt
             session.lastResult match {
               case Some(df) =>
-                // nrows precedes the rows in the JSON shape, so count
-                // first (cheap pruned job), then stream the rows to the
-                // writer partition at a time instead of buffering the
-                // whole page
+                // one pass: stream the page to the writer a partition at
+                // a time (no whole-page buffer) and count while writing;
+                // nrows follows the rows. hasNext runs the first job
+                // before anything is written, so a failing result still
+                // gets a clean error line.
                 import scala.jdk.CollectionConverters._
-                val page = df.limit(n)
-                val nRows = page.count()
+                val rows = df.limit(n).toLocalIterator().asScala
+                rows.hasNext
                 val fields = df.columns.map(jstr).mkString("[", ",", "]")
-                out.print(s"""{"ok":true,"nrows":$nRows,"fields":$fields,"rows":[""")
-                var first = true
-                page.toLocalIterator().asScala.foreach { r =>
-                  if (!first) out.print(",")
-                  first = false
+                out.print(s"""{"ok":true,"fields":$fields,"rows":[""")
+                var nRows = 0L
+                rows.foreach { r =>
+                  if (nRows > 0) out.print(",")
+                  nRows += 1
                   out.print(r.toSeq.map(jval).mkString("[", ",", "]"))
                 }
-                out.println("]}")
+                out.println(s"""],"nrows":$nRows}""")
               case None =>
                 out.println("""{"ok":false,"error":"no result set"}""")
             }

@@ -2,21 +2,14 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes EXPLAIN.md: formatted physical plans of the headline queries,
   * so plan quality (pushdown, broadcast, partial agg, codegen) is
   * reviewable without running anything. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed 4 cores: the dumped plan text (partition counts) must not vary by host
+    val spark = graft.core.GraftSession(cpus = 4)
     val picks = Seq(
       "q01_filter_project", "q03_agg_group", "q06_join_chain",
       "q09_subset_rekey", "a10_agg_elementwise", "d03_minhash_lsh",

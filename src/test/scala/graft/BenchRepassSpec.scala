@@ -85,6 +85,35 @@ class BenchRepassSpec extends AnyFunSuite {
     assert(Bench.smearCandidates(baseline, measured) == Seq("b"))
   }
 
+  test("a failed query is listed under failed and billed nowhere") {
+    val line = Bench.benchLine("0.1",
+      results = Seq(("q01", 1.0, 1), ("q33", 0.2, 2), ("d05", 0.4, 3)),
+      ingest = Seq("q33" -> 2.5),
+      repass = Seq("q01" -> 0.9, "d05" -> 0.3),
+      smear = Some((1.3, Some(1.1))),
+      failed = Seq("q33", "d05"))
+    assert(line.contains("\"bench_schema\":3"))
+    assert(line.contains("\"failed\":[\"q33\",\"d05\"]"))
+    assert(line.contains("\"value\":1.000,"))
+    assert(line.contains("\"total_with_ingest\":1.000,"))
+    assert(line.contains("\"reps\":{}") && line.contains("\"ingest\":{}"))
+    assert(line.contains("\"repass\":{\"q01\":0.900}"))
+    // the next sweep's baseline never carries a failed query's time
+    val (sf, qs) = Bench.parseBenchLine(line)
+    assert(sf.contains("0.1"))
+    assert(qs == Map("q01" -> 1.0))
+  }
+
+  test("a sweep with no failures publishes an empty failed list") {
+    val line = Bench.benchLine("0.01", Seq(("q01", 0.5, 1), ("q33", 0.25, 2)),
+      Seq("q33" -> 2.0), Nil, None, Nil)
+    assert(line.contains("\"failed\":[]"))
+    assert(line.contains("\"value\":0.750,"))
+    assert(line.contains("\"total_with_ingest\":2.750,"))
+    assert(line.contains("\"reps\":{\"q33\":2}"))
+    assert(!line.contains("sweep_smear"))
+  }
+
   test("parseBenchLine recovers sf and the per-query map") {
     val line = """{"metric":"total","value":9.1,"unit":"sec","bench_schema":2,""" +
       """"queries":{"q01":0.123,"m27":1.643},"reps":{"m27":2},""" +

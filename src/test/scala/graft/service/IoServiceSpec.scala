@@ -270,6 +270,12 @@ class IoServiceSpec extends SparkSpec {
       assert(rs.contains("\"nrows\":5") && rs.contains("\"fields\":[\"id_dim\",\"n\"]"),
         s"unexpected RS: $rs")
       assert(rs.contains("[1,2]"), s"row values missing: $rs")
+      // nrows is counted while the page streams: it must equal the rows sent
+      val row = "\\[\\d+,\\d+\\]".r
+      assert(row.findAllIn(rs).size == 5, s"unexpected RS: $rs")
+      val rs3 = send("RS 3")
+      assert(rs3.contains("\"nrows\":3") && row.findAllIn(rs3).size == 3,
+        s"unexpected RS 3: $rs3")
       // error path: unknown fragment
       assert(send("EQ operation=select;field=id_dim;from=nope").contains("\"ok\":false"))
       assert(send("BYE").contains("\"ok\":true"))
